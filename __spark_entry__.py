@@ -130,7 +130,7 @@ def _crawl_link_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai4orgwebscraper_spark.operators import crawl_analytics as CA
 
     out = _reference_outputs(spark)
-    return CA.link_domain_topk(out.fetch_log, out.outlinks.select("url_hash", "href"))
+    return CA.link_domain_topk(out.fetch_log, out.outlinks)
 
 
 def _crawl_internal_external(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,9 +139,7 @@ def _crawl_internal_external(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai4orgwebscraper_spark.operators import crawl_analytics as CA
 
     out = _reference_outputs(spark)
-    return CA.internal_external_split(
-        out.fetch_log, out.outlinks.select("url_hash", "href")
-    )
+    return CA.internal_external_split(out.fetch_log, out.outlinks)
 
 
 def _crawl_status_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:

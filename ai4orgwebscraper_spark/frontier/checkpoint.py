@@ -58,42 +58,6 @@ class ParquetSnapshotFormat(TableFormat):
         return spark.read.parquet(*paths)
 
 
-class IcebergSnapshotFormat(TableFormat):
-    """Production swap point: requires the iceberg-spark-runtime jar on
-    the classpath and a configured catalog (not present in this
-    sandbox). Each round's increment becomes `table.append()` and the
-    cumulative read a plain table scan — Iceberg's snapshot log then
-    subsumes the manifest chain."""
-
-    def __init__(self, catalog: str = "spark_catalog"):
-        self.catalog = catalog
-
-    def _require(self, spark: SparkSession) -> None:
-        jconf = spark.conf
-        impl = jconf.get(f"spark.sql.catalog.{self.catalog}", None)
-        if impl is None or "iceberg" not in str(impl).lower():
-            raise NotImplementedError(
-                f"Iceberg catalog {self.catalog!r} is not configured in this "
-                "session (iceberg-spark-runtime jar absent in the sandbox); "
-                "use ParquetSnapshotFormat"
-            )
-
-    def _ident(self, path: str) -> str:
-        # map the layout path to a catalog identifier
-        return f"{self.catalog}.crawl.{path.strip('/').replace('/', '_').replace('=', '_')}"
-
-    def write(self, df: DataFrame, path: str) -> None:
-        self._require(df.sparkSession)
-        df.writeTo(self._ident(path)).createOrReplace()
-
-    def read(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        self._require(spark)
-        out = spark.table(self._ident(paths[0]))
-        for p in paths[1:]:
-            out = out.unionByName(spark.table(self._ident(p)))
-        return out
-
-
 DEFAULT_FORMAT = ParquetSnapshotFormat()
 
 

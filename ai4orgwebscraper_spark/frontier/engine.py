@@ -40,15 +40,14 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
 import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai4orgwebscraper_spark import schemas
+from ai4orgwebscraper_spark.frontier import bloom
 from ai4orgwebscraper_spark.frontier import checkpoint as ckpt
 from ai4orgwebscraper_spark.frontier.fetch import fetch_arrow_fn
 from ai4orgwebscraper_spark.functions import urls as U
@@ -171,10 +170,8 @@ class CrawlEngine:
         max_rounds: int = 50,
         reference_mode: bool = False,
         checkpoint_dir: str | None = None,
-        salt_buckets: int | None = None,
         collect_metrics: bool = False,
         use_bloom_prefilter: bool | str = "auto",
-        seen_filter: str = "bloom",
         rank_scores: DataFrame | None = None,
         rank_scores_tag: str = "",
         refresh_seeds: bool = False,
@@ -188,17 +185,8 @@ class CrawlEngine:
         self.max_rounds = max_rounds
         self.reference_mode = reference_mode
         self.checkpoint_dir = checkpoint_dir
-        self.salt_buckets = salt_buckets
         self.collect_metrics = collect_metrics
         self.use_bloom_prefilter = use_bloom_prefilter
-        # "bloom" | "cuckoo" — which approximate seen-set prefilter the
-        # BFS path shards (frontier/bloom.py vs frontier/cuckoo.py).
-        # Result-transparent either way (exact anti-join stays the
-        # authority), so NOT part of the config fingerprint; cuckoo adds
-        # deletion support for state rollbacks.
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
-        self.seen_filter = seen_filter
         # rank-weighted frontier priority (north rule: "priority queue
         # (depth + host-budget score)"; graph.py's PageRank is the
         # canonical producer): (url_hash, score) joined into each
@@ -273,36 +261,15 @@ class CrawlEngine:
         return self.spark.createDataFrame(rows, schema=schemas.SEEDS)
 
     def _canonical_seeds(self, seeds: DataFrame) -> DataFrame:
-        """normalize (reference app_wrapper.py:13-22) + key + host —
-        pure column expressions, fully codegen'd. URLs whose host the
-        JVM parser rejects (e.g. a %-encoded byte in the authority —
-        possible since the canonicalizer percent-encodes non-ASCII)
-        are DROPPED here, the P2 validity predicate applied for real;
-        the oracle twin drops exactly when host_py() is falsy, so both
-        engines agree instead of diverging on NULL-vs-'' hosts."""
-        canon = U.canonicalize_col(F.col("url"))
-        out = (
-            seeds.select("seed_rank", canon.alias("url"))
-            .filter(F.col("url").isNotNull())
-            .select(
-                U.url_hash_col(F.col("url")).alias("url_hash"),
-                "url",
-                U.host_col(F.col("url")).alias("host"),
-                F.lit(0).alias("depth"),
-                F.col("seed_rank"),
-            )
-            .filter(F.col("host").isNotNull() & (F.col("host") != ""))
+        """normalize (reference app_wrapper.py:13-22) + key + host via
+        the one frontier-entry rule (urls.intake_urls) — pure column
+        expressions, fully codegen'd; seeds enter at depth 0."""
+        out = U.intake_urls(seeds, F.col("url"), "seed_rank").withColumn(
+            "depth", F.lit(0)
         )
         if self.trap_guard:
             out = out.filter(~U.is_trap_col(U.path_col(F.col("url"))))
         return out
-
-    def _seen_filter_mod(self):
-        if self.seen_filter == "cuckoo":
-            from ai4orgwebscraper_spark.frontier import cuckoo as M
-        else:
-            from ai4orgwebscraper_spark.frontier import bloom as M
-        return M
 
     def _spill(
         self, df: DataFrame, name: str, rnd: int, est_rows: int | None = None
@@ -371,10 +338,10 @@ class CrawlEngine:
         hash so one hot host fans out across tasks (SURVEY.md §4.2#1),
         then run the vectorized fetch UDF.
 
-        The salt must SCALE WITH PARALLELISM: a fixed salt caps the hot
-        host (40% of the synthetic corpus) at salt_buckets tasks and
-        flattens the 8->32-core speedup. Default: 8x parallelism, so
-        the hottest (host, salt) cell is ~0.4%/8 of the batch.
+        The salt SCALES WITH PARALLELISM: a fixed salt would cap the
+        hot host (40% of the synthetic corpus) at a fixed task count
+        and flatten the 8->32-core speedup. 8x parallelism buckets keep
+        the hottest (host, salt) cell at ~0.4%/8 of the batch.
 
         ``n_rows`` (known for free from the global-seq offset pass)
         bounds the fan-out: a 600-row retry round runs 1 python worker,
@@ -385,7 +352,7 @@ class CrawlEngine:
                 1,
                 min(n_parts, -(-n_rows // self.FETCH_ROWS_PER_TASK)),
             )
-        buckets = self.salt_buckets or 8 * self.spark.sparkContext.defaultParallelism
+        buckets = 8 * self.spark.sparkContext.defaultParallelism
         salted = admitted.withColumn(
             "__salt",
             F.pmod(F.xxhash64("url_hash"), F.lit(buckets)),
@@ -489,16 +456,6 @@ class CrawlEngine:
     PRIORITY_DEPTH_SCALE = 10**10
     PRIORITY_SCORE_QUANTUM = 1e9
 
-    @staticmethod
-    def priority_col():
-        """Frontier priority score (north rule: 'priority queue (depth +
-        host-budget score)'): lower runs first. Default = depth — pure
-        BFS, which is what the normative oracle specifies. With
-        ``rank_scores`` the engine uses ``_ranked_priority`` instead
-        (deterministic quantized score fold; oracle in lockstep via
-        bfs_crawl(rank_scores=...))."""
-        return F.col("depth").cast("long")
-
     def _ranked_priority(self, planned: DataFrame) -> DataFrame:
         """Join (url_hash, score) and fold it under depth. The join is
         keyed on url_hash — co-partitioned with the frontier's own
@@ -536,69 +493,58 @@ class CrawlEngine:
         gap = F.greatest(F.lit(1000.0) / rate, F.coalesce(F.col("crawl_delay_s"), F.lit(0.0)) * 1000.0)
         return joined.withColumn("__budget", budget).withColumn("__gap_ms", gap)
 
-    def _cached_offers(
-        self, parents: DataFrame, carry_links: DataFrame
-    ) -> DataFrame:
-        """Offers replayed from the carried run's CACHED outlinks —
-        the same resolve/validate/robots pipeline as the in-loop offer
-        stage, with the parent never refetched. ``parents`` is
-        (url_hash, depth, node_seq): carry-fetched nodes whose
-        effective depth just improved to ``depth`` (< max_depth).
-        Cached outlinks lost their in-page position (outlinks_cum
-        explodes without posexplode), so intra-parent order falls back
-        to the resolved URL — deterministic, and order only affects
-        intra-depth scheduling, never set membership. seed_rank =
-        node_seq * 1000 + rank: carry seqs are < this run's seq
-        offset, so replayed offers sort ahead of (and disjoint from)
-        the run's own offers within a depth."""
-        links = parents.join(carry_links, "url_hash").select(
-            "node_seq", (F.col("depth") + 1).alias("depth"), "host", "href"
-        )
-        resolved = links.select(
-            "node_seq",
-            "depth",
-            U.canonicalize_col(
-                U.resolve_outlink_col(F.col("host"), F.col("href"))
-            ).alias("url"),
-        ).filter(F.col("url").isNotNull())
-        w = Window.partitionBy("node_seq").orderBy("url")
-        offers = (
-            resolved.withColumn("__pos", F.row_number().over(w) - 1)
-            .select(
-                U.url_hash_col(F.col("url")).alias("url_hash"),
-                "url",
-                U.host_col(F.col("url")).alias("child_host"),
-                U.path_col(F.col("url")).alias("__path"),
-                "depth",
-                (F.col("node_seq") * 1000 + F.col("__pos")).alias("seed_rank"),
-            )
-            .filter(F.col("child_host").isNotNull() & (F.col("child_host") != ""))
-        )
-        if self.trap_guard:  # same guard as the in-loop offer stage
+    def _offer(self, offers: DataFrame) -> DataFrame:
+        """The one offer stage, shared by in-loop and carry-replayed
+        offers. ``offers`` = urls.intake_urls rows (url_hash, url,
+        host, depth, seed_rank). Trap guard, then robots — both BEFORE
+        seen counting (oracle semantics) — then one row per URL: every
+        offer counts toward multiplicity, the shallowest depth and the
+        earliest rank win."""
+        offers = offers.withColumn("__path", U.path_col(F.col("url")))
+        if self.trap_guard:  # trap-shaped offers never reach seen
             offers = offers.filter(~U.is_trap_col(F.col("__path")))
-        offers = (
-            offers.join(
-                F.broadcast(self.hosts_df.select("host", "robots_disallow")),
-                offers.child_host == F.col("host"),
-                "left",
-            )
-            .filter(
-                ~F.coalesce(
-                    F.exists(
-                        "robots_disallow", lambda p: F.col("__path").startswith(p)
-                    ),
-                    F.lit(False),
-                )
-            )
-            .select(
-                "url_hash", "url", F.col("child_host").alias("host"),
-                "depth", "seed_rank",
+        allowed = offers.join(
+            F.broadcast(self.hosts_df.select("host", "robots_disallow")),
+            "host",
+            "left",
+        ).filter(
+            ~F.coalesce(
+                F.exists("robots_disallow", lambda p: F.col("__path").startswith(p)),
+                F.lit(False),
             )
         )
-        return offers.groupBy("url_hash", "url", "host").agg(
+        return allowed.groupBy("url_hash", "url", "host").agg(
             F.count("*").alias("multiplicity"),
             F.min("depth").alias("depth"),
             F.min("seed_rank").alias("seed_rank"),
+        )
+
+    def _cached_offers(
+        self, parents: DataFrame, carry_links: DataFrame
+    ) -> DataFrame:
+        """Offers replayed from the carried run's CACHED outlinks
+        through the in-loop offer stage, with the parent never
+        refetched. ``parents`` is (url_hash, depth, node_seq):
+        carry-fetched nodes whose effective depth just improved to
+        ``depth`` (< max_depth). Cached outlinks lost their in-page
+        position (outlinks_cum explodes without posexplode), so
+        intra-parent order falls back to the canonical URL —
+        deterministic, and order only affects intra-depth scheduling,
+        never set membership. seed_rank = node_seq * 1000 + rank:
+        carry seqs are < this run's seq offset, so replayed offers sort
+        ahead of (and disjoint from) the run's own offers within a
+        depth."""
+        offers = U.intake_urls(
+            parents.join(carry_links, "url_hash"),
+            U.resolve_outlink_col(F.col("host"), F.col("href")),
+            "node_seq",
+            (F.col("depth") + 1).alias("depth"),
+        )
+        w = Window.partitionBy("node_seq").orderBy("url")
+        return self._offer(
+            offers.withColumn(
+                "seed_rank", F.col("node_seq") * 1000 + F.row_number().over(w) - 1
+            ).drop("node_seq")
         )
 
     def _carry_relax(
@@ -630,18 +576,7 @@ class CrawlEngine:
         for step in range(self.max_depth):
             # apply the improvements to the best-known depth table
             carry_best = self._spill(
-                carry_best.unionByName(
-                    cur.select(
-                        "url_hash",
-                        F.col("depth").alias("best_depth"),
-                        "node_seq",
-                    )
-                )
-                .groupBy("url_hash")
-                .agg(
-                    F.min("best_depth").alias("best_depth"),
-                    F.min("node_seq").alias("node_seq"),
-                ),
+                _fold_best_depth(carry_best, cur),
                 f"carry_best_s{step}", first_seen_round,
             )
             parents = cur.filter(F.col("depth") < F.lit(self.max_depth))
@@ -686,6 +621,7 @@ class CrawlEngine:
                 " pass exactly one (carry IS the state)"
             )
         start_round, seq_counter = 0, 0
+        carry_best = None  # carry mode's best-known fetch depths
         fetch_log_cum = spark.createDataFrame([], schemas.FETCH_LOG)
         documents_cum = spark.createDataFrame([], schemas.DOCUMENTS)
         outlinks_cum = spark.createDataFrame(
@@ -780,10 +716,7 @@ class CrawlEngine:
                     )
                 else:
                     carry_best = self._spill(
-                        carry.fetch_log.groupBy("url_hash").agg(
-                            F.min("depth").alias("best_depth"),
-                            F.min("seq").alias("node_seq"),
-                        ),
+                        _fold_best_depth(None, _depth_rows(carry.fetch_log)),
                         "carry_best", start_round - 1,
                     )
                 # seeds the carried run reached DEEPER improve to depth
@@ -801,18 +734,7 @@ class CrawlEngine:
                     # later offers can't spuriously replay the stale
                     # cache over the fresh fetch
                     carry_best = self._spill(
-                        carry_best.unionByName(
-                            seeds_improved.select(
-                                "url_hash",
-                                F.col("depth").alias("best_depth"),
-                                "node_seq",
-                            )
-                        )
-                        .groupBy("url_hash")
-                        .agg(
-                            F.min("best_depth").alias("best_depth"),
-                            F.min("node_seq").alias("node_seq"),
-                        ),
+                        _fold_best_depth(carry_best, seeds_improved),
                         "carry_best_refresh", start_round - 1,
                     )
                     seen_parts = [prev_seen, *seen_parts]
@@ -875,13 +797,11 @@ class CrawlEngine:
         )
         bloom_active = self.use_bloom_prefilter is True
 
-        B = self._seen_filter_mod()
-
         def _bloom_catchup() -> None:
             for i, p in enumerate(seen_parts):
                 if i >= len(bloom_parts):
                     bloom_parts.append(
-                        self._spill(B.build_shards(p), f"bloom_init{i}", 0)
+                        self._spill(bloom.build_shards(p), f"bloom_init{i}", 0)
                     )
 
         if bloom_active:
@@ -890,13 +810,6 @@ class CrawlEngine:
         rounds_done = start_round
         round_metrics: dict[str, dict] = {}
         fresh_start = state is None
-        debug_timing = os.environ.get("SPARK_GRAFT_DEBUG_TIMING") == "1"
-
-        def _tick(label, t0_box):
-            if debug_timing:
-                now = time.time()
-                print(f"    [round timing] {label}: {now - t0_box[0]:.2f}s", flush=True)
-                t0_box[0] = now
 
         # checkpoint resume shares max_rounds with the original run (a
         # global stop condition); carry-continuation gets its own budget
@@ -905,7 +818,6 @@ class CrawlEngine:
             start_round + self.max_rounds if carry is not None else self.max_rounds
         )
         for rnd in range(start_round, end_round):
-            _t = [time.time()]
             # SLIM iterative state (frontier/seen) is localCheckpointed
             # every round: it truncates lineage, which plain persist does
             # not — persisted-only state makes plan analysis and stage
@@ -918,15 +830,18 @@ class CrawlEngine:
                 # unbounded seed lists keep the durable parquet path
                 est_rows=seen_est if seen_est > 0 else None,
             )
-            _tick("frontier ckpt", _t)
             if frontier.isEmpty():
                 break
-            _tick("isEmpty", _t)
+            # frontier priority (north rule: 'priority queue (depth +
+            # host-budget score)'), lower runs first: depth — pure BFS,
+            # the normative oracle's order — unless rank_scores fold a
+            # quantized score under it (oracle lockstep via
+            # bfs_crawl(rank_scores=...))
             planned = self._host_plan(frontier)
             if self.rank_scores is not None:
                 planned = self._ranked_priority(planned)
             else:
-                planned = planned.withColumn("priority", self.priority_col())
+                planned = planned.withColumn("priority", F.col("depth").cast("long"))
             w = Window.partitionBy("host").orderBy("priority", "seed_rank")
             planned = planned.withColumn("__rn", F.row_number().over(w))
             admitted = planned.filter(F.col("__rn") <= F.col("__budget"))
@@ -966,7 +881,6 @@ class CrawlEngine:
                 admitted, ["priority", "seed_rank"], seq_col="seq",
                 offset=seq_counter, pin_registry=self._pinned, stats=seq_stats,
             )
-            _tick("admission+seq", _t)
 
             # results stay persisted for the whole run: every later
             # consumer (cum unions, final collects) reads the cache, and
@@ -980,7 +894,6 @@ class CrawlEngine:
             )
             self._pinned.append(results)
             n_fetched = results.count()
-            _tick(f"fetch ({n_fetched})", _t)
             if n_fetched == 0 and rest.isEmpty():
                 break
             seq_counter += n_fetched
@@ -1007,53 +920,19 @@ class CrawlEngine:
             links = parents.select(
                 "seq", "host", "depth", F.posexplode_outer("outlinks").alias("pos", "href")
             ).filter(F.col("href").isNotNull())
-            resolved = links.select(
-                "seq",
-                "depth",
-                "pos",
-                U.canonicalize_col(U.resolve_outlink_col(F.col("host"), F.col("href"))).alias("url"),
-            ).filter(F.col("url").isNotNull())
-            offers = resolved.select(
-                U.url_hash_col(F.col("url")).alias("url_hash"),
-                "url",
-                U.host_col(F.col("url")).alias("child_host"),
-                U.path_col(F.col("url")).alias("__path"),
+            offers = U.intake_urls(
+                links,
+                U.resolve_outlink_col(F.col("host"), F.col("href")),
                 (F.col("depth") + 1).alias("depth"),
                 (F.col("seq") * 1000 + F.col("pos")).alias("seed_rank"),
-            ).filter(  # P2 validity: drop host-less outlinks (oracle twin:
-                # host_py() falsy) so NULL hosts never enter the frontier
-                F.col("child_host").isNotNull() & (F.col("child_host") != "")
-            )
-            if self.trap_guard:  # trap-shaped offers never reach seen
-                offers = offers.filter(~U.is_trap_col(F.col("__path")))
-            # robots filter BEFORE seen counting (oracle semantics)
-            offers = (
-                offers.join(
-                    F.broadcast(self.hosts_df.select("host", "robots_disallow")),
-                    offers.child_host == F.col("host"),
-                    "left",
-                )
-                .filter(
-                    ~F.coalesce(
-                        F.exists(
-                            "robots_disallow", lambda p: F.col("__path").startswith(p)
-                        ),
-                        F.lit(False),
-                    )
-                )
-                .select("url_hash", "url", F.col("child_host").alias("host"), "depth", "seed_rank")
             )
 
             # ONE spill serves both roles: the dedup candidate set and
             # the round's seen delta (projection)
             offer_counts = self._spill(
-                offers.groupBy("url_hash", "url", "host")
-                .agg(F.count("*").alias("multiplicity"), F.min("depth").alias("depth"),
-                     F.min("seed_rank").alias("seed_rank"))
-                .withColumn("first_seen_round", F.lit(rnd)),
+                self._offer(offers).withColumn("first_seen_round", F.lit(rnd)),
                 "offer_counts", rnd, est_rows=n_fetched * 5,
             )
-            _tick("offers", _t)
 
             # enqueue first discoveries only. The partitioned bloom
             # prefilter (frontier/bloom.py) splits candidates: bloom-
@@ -1066,7 +945,7 @@ class CrawlEngine:
                 bloom_active = True
                 _bloom_catchup()  # backfill shard parts for prior deltas
             if bloom_active:
-                flagged = B.prefilter_new(offer_counts, bloom_parts)
+                flagged = bloom.prefilter_new(offer_counts, bloom_parts)
                 definitely_new = flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
                 maybe_seen_rows = flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
                 new_urls = definitely_new.unionByName(
@@ -1124,7 +1003,7 @@ class CrawlEngine:
                         if bloom_active:
                             bloom_parts.append(
                                 self._spill(
-                                    B.build_shards(d),
+                                    bloom.build_shards(d),
                                     f"bloom_relax{len(seen_parts)}", rnd,
                                 )
                             )
@@ -1149,14 +1028,13 @@ class CrawlEngine:
                 # (outlink fan-out <= 5) — skips a count() job
                 bloom_parts.append(
                     self._spill(
-                        B.build_shards(
+                        bloom.build_shards(
                             seen_delta,
-                            expected_per_shard=max(64, n_fetched * 5 // B.DEFAULT_SHARDS),
+                            expected_per_shard=max(64, n_fetched * 5 // bloom.DEFAULT_SHARDS),
                         ),
                         "bloom", rnd,
                     )
                 )
-            _tick("seen delta", _t)
 
             if self.checkpoint_dir:
                 # round 0 of a fresh run folds the seed delta into the
@@ -1192,27 +1070,12 @@ class CrawlEngine:
         documents = documents_cum.dropDuplicates(["doc_id"])
         # incrementally maintain the best-depth state: this run's rows
         # (seq >= the carried offset — the filter prunes the carried
-        # parquet leg) min-agged and folded into the carried table, so
-        # the NEXT continuation never re-aggregates the cumulative log
-        new_depths = (
-            fetch_log_cum.filter(F.col("seq") >= F.lit(run_seq0))
-            .groupBy("url_hash")
-            .agg(
-                F.min("depth").alias("best_depth"),
-                F.min("seq").alias("node_seq"),
-            )
+        # parquet leg) folded into the carried table, so the NEXT
+        # continuation never re-aggregates the cumulative log
+        fetch_depths = _fold_best_depth(
+            carry_best,
+            _depth_rows(fetch_log_cum.filter(F.col("seq") >= F.lit(run_seq0))),
         )
-        if carry is not None:
-            fetch_depths = (
-                carry_best.unionByName(new_depths)
-                .groupBy("url_hash")
-                .agg(
-                    F.min("best_depth").alias("best_depth"),
-                    F.min("node_seq").alias("node_seq"),
-                )
-            )
-        else:
-            fetch_depths = new_depths
         return CrawlOutputs(
             fetch_log_cum, documents, seen,
             {"rounds": rounds_done, "fetched": seq_counter, "round_metrics": round_metrics},
@@ -1221,7 +1084,20 @@ class CrawlEngine:
         )
 
 
-def throughput_urls_per_sec(n_urls: int, wall_seconds: float) -> float:
-    if wall_seconds <= 0:
-        return math.inf
-    return n_urls / wall_seconds
+def _depth_rows(fetch_log: DataFrame) -> DataFrame:
+    """(url_hash, depth, node_seq) per fetch_log row — the input shape
+    of _fold_best_depth (node_seq = the fetch's global seq)."""
+    return fetch_log.select("url_hash", "depth", F.col("seq").alias("node_seq"))
+
+
+def _fold_best_depth(best: DataFrame | None, rows: DataFrame) -> DataFrame:
+    """The one best-depth fold: (url_hash, best_depth, node_seq) with the
+    minimum depth and seq per URL over the best-known table ``best``
+    (None = empty) and new (url_hash, depth, node_seq) rows."""
+    rows = rows.select("url_hash", F.col("depth").alias("best_depth"), "node_seq")
+    if best is not None:
+        rows = best.unionByName(rows)
+    return rows.groupBy("url_hash").agg(
+        F.min("best_depth").alias("best_depth"),
+        F.min("node_seq").alias("node_seq"),
+    )

@@ -27,7 +27,7 @@ import ipaddress
 import re
 from urllib.parse import quote, urlparse
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -104,14 +104,24 @@ def path_col(canonical_url: Column) -> Column:
     return F.try_parse_url(canonical_url, F.lit("PATH"))
 
 
-def is_valid_url_col(canonical_url: Column) -> Column:
-    """Scheme+netloc required (reference: web_scraper_js.py:107-110)."""
-    return (
-        canonical_url.isNotNull()
-        & canonical_url.rlike("^https?://")
-        & host_col(canonical_url).isNotNull()
-        & (host_col(canonical_url) != "")
+def intake_urls(df: DataFrame, raw_url: Column, *keep: str | Column) -> DataFrame:
+    """The one frontier-entry rule: canonicalize ``raw_url``, key it and
+    take its host, dropping NULL (blank) URLs and host-less rows — the
+    P2 validity predicate. Returns ``(url_hash, url, host, *keep)``.
+    The oracle twin keeps a raw URL exactly when
+    ``canonicalize_py(raw)`` and ``host_py()`` of it are both truthy,
+    so engine and oracle drop the same rows instead of diverging on
+    NULL-vs-'' hosts (a %-encoded byte in the authority — possible
+    since the canonicalizer percent-encodes non-ASCII — has no host)."""
+    canon = df.select(canonicalize_col(raw_url).alias("url"), *keep).filter(
+        F.col("url").isNotNull()
     )
+    return canon.select(
+        url_hash_col(F.col("url")).alias("url_hash"),
+        "url",
+        host_col(F.col("url")).alias("host"),
+        *[c for c in canon.columns if c != "url"],
+    ).filter(F.col("host").isNotNull() & (F.col("host") != ""))
 
 
 def resolve_outlink_col(base_host: Column, href: Column) -> Column:

@@ -64,11 +64,13 @@ def media_alt_coverage(documents: DataFrame) -> DataFrame:
 
 def link_domain_topk(fetch_log: DataFrame, outlinks: DataFrame, k: int = 10) -> DataFrame:
     """A3: top-k target domains over resolved outlinks
-    (app.py:195-207). ``outlinks`` = (url_hash, href) rows."""
+    (app.py:195-207). ``outlinks`` = (url_hash, href, ...) rows —
+    CrawlOutputs.outlinks as returned; its own host column is ignored
+    in favour of the fetch_log's."""
     # dedup the log side: refetched duplicate URLs (reference semantics,
     # SURVEY.md C4) must not multiply outlink rows through the join
     pages = fetch_log.select("url_hash", "host").dropDuplicates(["url_hash"])
-    resolved = outlinks.join(pages, "url_hash").select(
+    resolved = outlinks.select("url_hash", "href").join(pages, "url_hash").select(
         U.host_col(
             U.canonicalize_col(U.resolve_outlink_col(F.col("host"), F.col("href")))
         ).alias("domain")
@@ -84,9 +86,10 @@ def link_domain_topk(fetch_log: DataFrame, outlinks: DataFrame, k: int = 10) -> 
 
 def internal_external_split(fetch_log: DataFrame, outlinks: DataFrame) -> DataFrame:
     """A4: per source host, internal vs external outlink tally
-    (app.py:503-527) — conditional aggregation."""
+    (app.py:503-527) — conditional aggregation. ``outlinks`` as in
+    link_domain_topk."""
     pages = fetch_log.select("url_hash", "host").dropDuplicates(["url_hash"])
-    resolved = outlinks.join(pages, "url_hash").select(
+    resolved = outlinks.select("url_hash", "href").join(pages, "url_hash").select(
         "host",
         U.host_col(
             U.canonicalize_col(U.resolve_outlink_col(F.col("host"), F.col("href")))

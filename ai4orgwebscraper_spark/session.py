@@ -15,6 +15,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """16g, capped at half of physical RAM: a heap the size of the
+    whole machine gets the JVM OOM-killed once it fills."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 * 1024**2)
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "ai4orgwebscraper_spark",
     cpus: int | None = None,
@@ -53,7 +60,7 @@ def get_spark(
         # reuse=false incl. 8M-row stages never hung; the cost is a
         # pandas-import tax per task, ~1-2s per python stage.
         .config("spark.python.worker.reuse", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         # shuffle spill to tmpfs: local-mode shuffles write to disk,
         # which does not scale with cores; RAM-backed shuffle keeps the

@@ -38,9 +38,8 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ai4orgwebscraper_spark.functions import urls as U
+from ai4orgwebscraper_spark.streaming.seed_stream import seed_file_stream
 
 _TABLES = ("fetch_log", "documents", "seen", "outlinks", "fetch_depths")
 
@@ -113,21 +112,10 @@ def stream_seed_bfs(
 
     if out_dir is None:
         out_dir = tempfile.mkdtemp(prefix=f"seed_bfs_{uuid.uuid4().hex[:8]}_")
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 1)
-        .load(seed_dir)
-    )
-    # same canonicalize/validate exprs as the engine's seed path; NO
-    # stateful dropDuplicates — the engine's own seen anti-join is the
+    # NO stateful dropDuplicates — the engine's seen anti-join is the
     # dedup authority (a re-streamed seed must still count toward seen
     # multiplicity, exactly as a duplicate seed does in batch mode)
-    canon = (
-        raw.select(U.canonicalize_col(F.col("value")).alias("url"))
-        .filter(F.col("url").isNotNull())
-        .select("url", U.host_col(F.col("url")).alias("host"))
-        .filter(F.col("host").isNotNull() & (F.col("host") != ""))
-    )
+    canon = seed_file_stream(spark, seed_dir)
 
     def _bfs_continuation(batch_df: DataFrame, batch_id: int) -> None:
         # admitted seed increment: reference seed-list scale (the crawl

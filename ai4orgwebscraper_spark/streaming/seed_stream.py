@@ -48,6 +48,17 @@ def _batch_dirs(out_dir: str, exclude: str | None = None) -> list[str]:
     return out
 
 
+def seed_file_stream(spark: SparkSession, seed_dir: str) -> DataFrame:
+    """The seed directory as a stream, one file per trigger, through
+    the frontier-entry rule (urls.intake_urls): (url_hash, url, host)."""
+    raw = (
+        spark.readStream.format("text")
+        .option("maxFilesPerTrigger", 1)
+        .load(seed_dir)
+    )
+    return U.intake_urls(raw, F.col("value"))
+
+
 def stream_seed_ingestion(
     spark: SparkSession,
     seed_dir: str,
@@ -69,22 +80,8 @@ def stream_seed_ingestion(
     state carries over, so nothing is ever admitted twice."""
     import tempfile
 
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 1)  # one seed file per trigger
-        .load(seed_dir)
-    )
-    canon = (
-        raw.select(U.canonicalize_col(F.col("value")).alias("url"))
-        .filter(F.col("url").isNotNull())
-        .select(
-            U.url_hash_col(F.col("url")).alias("url_hash"),
-            "url",
-            U.host_col(F.col("url")).alias("host"),
-        )
-        .filter(F.col("host").isNotNull() & (F.col("host") != ""))
-        .dropDuplicates(["url_hash"])  # stateful: dedup across ALL triggers
-    )
+    # stateful: dedup across ALL triggers
+    canon = seed_file_stream(spark, seed_dir).dropDuplicates(["url_hash"])
     if out_dir is None:
         out_dir = tempfile.mkdtemp(prefix=f"seed_admit_{uuid.uuid4().hex[:8]}_")
 
@@ -168,22 +165,8 @@ def stream_seed_crawl(
         engine = CrawlEngine(spark, reference_mode=True)
     if out_dir is None:
         out_dir = tempfile.mkdtemp(prefix=f"seed_crawl_{uuid.uuid4().hex[:8]}_")
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 1)
-        .load(seed_dir)
-    )
-    canon = (
-        raw.select(U.canonicalize_col(F.col("value")).alias("url"))
-        .filter(F.col("url").isNotNull())
-        .select(
-            U.url_hash_col(F.col("url")).alias("url_hash"),
-            "url",
-            U.host_col(F.col("url")).alias("host"),
-        )
-        .filter(F.col("host").isNotNull() & (F.col("host") != ""))
-        .dropDuplicates(["url_hash"])
-    )
+    canon = seed_file_stream(spark, seed_dir).dropDuplicates(["url_hash"])
+
     def _crawl_round(batch_df: DataFrame, batch_id: int) -> None:
         urls = sorted(r["url"] for r in batch_df.select("url").collect())
         if not urls:

@@ -87,6 +87,16 @@ def test_link_domains_and_split(spark, crawl):
         assert internal + external == sum(1 for (_uh, h, _href) in triples if h == host)
 
 
+def test_link_analytics_take_engine_outlinks_as_returned(crawl):
+    """CrawlOutputs.outlinks carries its own host column; both link
+    analytics must accept it unprojected and agree with the
+    (url_hash, href) projection."""
+    out, _oracle = crawl
+    slim = out.outlinks.select("url_hash", "href")
+    for fn in (CA.link_domain_topk, CA.internal_external_split):
+        assert fn(out.fetch_log, out.outlinks).collect() == fn(out.fetch_log, slim).collect()
+
+
 def test_engine_outlinks_table_matches_oracle(crawl):
     """CrawlOutputs.outlinks (the engine's own link-graph table, new in
     r03 so the A3/A4 analytics are driver-visible) must equal the

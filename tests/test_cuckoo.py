@@ -1,6 +1,6 @@
 """Partitioned cuckoo-filter seen-set: no false negatives, bounded
 false positives, deletion support (the capability bloom lacks), loud
-shard-count mismatch, and result transparency inside the engine."""
+shard-count mismatch and resize-on-overflow."""
 
 from __future__ import annotations
 
@@ -9,9 +9,6 @@ import hashlib
 import pytest
 
 from ai4orgwebscraper_spark.frontier import cuckoo as C
-from ai4orgwebscraper_spark.frontier.engine import CrawlEngine
-from ai4orgwebscraper_spark.frontier.oracle import bfs_crawl
-from ai4orgwebscraper_spark.sources.corpus import default_hosts, seed_urls
 
 
 def _keys(prefix: str, n: int) -> list[str]:
@@ -118,24 +115,3 @@ def test_overflow_resizes_not_drops(spark):
     cands = spark.createDataFrame([(k,) for k in present], "url_hash string")
     flagged = C.prefilter_new(cands, shards, n_shards=1).collect()
     assert all(r["__maybe_seen"] for r in flagged)  # zero false negatives
-
-
-def test_engine_cuckoo_prefilter_result_transparent(spark):
-    """BFS with the cuckoo prefilter forced ON must match the oracle
-    exactly — same contract as the bloom (the exact anti-join stays
-    the authority; the filter only prunes the join's build side)."""
-    seeds = seed_urls(40)
-    hosts = default_hosts()
-    oracle = bfs_crawl(seeds, hosts, max_depth=1, round_seconds=10.0, max_rounds=50)
-    eng = CrawlEngine(
-        spark, hosts=hosts, max_depth=1, round_seconds=10.0, max_rounds=50,
-        use_bloom_prefilter=True, seen_filter="cuckoo",
-    )
-    out = eng.run(eng.seeds_from_list(seeds))
-    log = out.fetch_log.orderBy("seq").collect()
-    assert [(r["url"], r["round"], r["fetched_at_ms"]) for r in log] == [
-        (x["url"], x["round"], x["fetched_at_ms"]) for x in oracle.fetch_log
-    ]
-    got_seen = {r["url"]: r["multiplicity"] for r in out.seen.collect()}
-    assert got_seen == oracle.seen
-    eng.close()

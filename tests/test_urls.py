@@ -50,6 +50,23 @@ def test_hash_and_host_match_python_twin(spark):
     assert [r["h"] for r in rows] == [U.url_hash_py(u) for u in urls]
     assert [r["host"] for r in rows] == [U.host_py(u) for u in urls]
 
+    # the frontier intake helper over RAW input: it keeps a row exactly
+    # when the twins give a canonical URL with a host; %-encoded
+    # authorities (escaped or unicode hosts) have none
+    raw = CASES + ["https://h%41.com/x", "bücher.example.com/x"]
+    df = spark.createDataFrame(list(enumerate(raw)), "rank long, url string")
+    got = [
+        tuple(r)
+        for r in U.intake_urls(df, F.col("url"), "rank").orderBy("rank").collect()
+    ]
+    want = [
+        (U.url_hash_py(c), c, U.host_py(c), i)
+        for i, c in enumerate(map(U.canonicalize_py, raw))
+        if c and U.host_py(c)
+    ]
+    assert got == want
+    assert len(raw) - len(want) == 4  # two blanks, two hostless authorities
+
 
 @given(st.text(alphabet=st.characters(codec="ascii", exclude_characters="\x00"), max_size=60))
 @settings(max_examples=200, deadline=None)
